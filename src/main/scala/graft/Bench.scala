@@ -1,13 +1,13 @@
 package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
-  /** One bench execution of a query: action inside ShuffleSizing.scoped (a
-    * sizing raise from one operator must not pin the next query's plan in
-    * this shared session), operator caches dropped afterwards. Extracted so
-    * the spec can assert the restore against the runner's real code path. */
-  private[graft] def runOnce(spark: SparkSession, sfDir: String)(
-      fn: (SparkSession, String) => DataFrame): Unit =
-    try graft.core.ShuffleSizing.scoped(spark) { fn(spark, sfDir).count(); () }
+  /** Run `body` isolated from the queries before and after it in a shared
+    * session: inside ShuffleSizing.scoped (a sizing raise from one operator
+    * must not pin the next query's plan), with operator caches, pinned
+    * blocks and temp views dropped afterwards. Bench, Verify, PlanDump and
+    * HeapReport all reset through this. */
+  private[graft] def isolated[A](spark: SparkSession)(body: => A): A =
+    try graft.core.ShuffleSizing.scoped(spark)(body)
     finally {
       graft.core.Caches.releaseAll() // drop operator-taken caches
       // localCheckpoint blocks (the operators' pin discipline) are freed
@@ -15,18 +15,24 @@ object Bench {
       // ContextCleaner processes them — in a 100+-query shared session
       // they pile up in the block manager and squeeze unified memory for
       // every LATER query (measured round 19: sub-second vocab queries ran
-      // 2× slower late in the full run than isolated). Between bench
-      // queries nothing references them — drop them synchronously. Temp
-      // views a query registered must go WITH their blocks: a view whose
-      // pinned backing blocks were just dropped is unrecoverable
-      // (checkpoint lineage is truncated), and bench queries are
-      // self-contained by contract anyway.
+      // 2× slower late in the full run than isolated). Between queries
+      // nothing references them — drop them synchronously. Temp views a
+      // query registered must go WITH their blocks: a view whose pinned
+      // backing blocks were just dropped is unrecoverable (checkpoint
+      // lineage is truncated), and queries are self-contained by contract
+      // anyway.
       spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = false))
       spark.catalog.listTables().collect()
         .filter(_.isTemporary)
         .foreach(t => spark.catalog.dropTempView(t.name))
     }
+
+  /** One bench execution of a query: its action, [[isolated]]. Extracted so
+    * the spec can assert the restore against the runner's real code path. */
+  private[graft] def runOnce(spark: SparkSession, sfDir: String)(
+      fn: (SparkSession, String) => DataFrame): Unit =
+    isolated(spark) { fn(spark, sfDir).count(); () }
 
   /** The compact-line key of a query name (`q79_bpe_pairs` → `q79`) —
     * unique by construction (main's shortKey logic falls back to the full
@@ -170,39 +176,8 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // the GraftSession.builder codegen-cache sizing (see there for the
-      // measured rationale): the bench runs 114 distinct queries in one
-      // session — the 100-entry default thrashes and every run of every
-      // pipeline query re-compiles ~500 generated classes with all tasks
-      // blocked on each compile. Scale-independent (a long-lived session
-      // wants this everywhere); the timing methodology is unchanged — the
-      // first run of each shape still pays its compiles.
-      .config("spark.sql.codegen.cache.maxEntries", sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4096"))
-      // GraftSession.builder's bypass-merge opt-out (see there for the
-      // measured rationale: the bypass writer's M×R per-map-task file
-      // churn dominates small shuffles on many-core nodes — q100 summed
-      // task time 114.7→15.3 s at local[32]). The bench measures what the
-      // library session ships. Env-overridable for A/B.
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BYPASS_THRESHOLD", "1"))
-      // FAIR scheduling for the pipeline's concurrent night chains
-      // (GraftSession.builder has the rationale) — the bench measures what
-      // the library session ships; sequential queries schedule identically
-      .config("spark.scheduler.mode",
-        sys.env.getOrElse("SPARK_GRAFT_SCHEDULER", "FAIR"))
-      // NIO chmod for file:// creates (GraftSession.builder has the
-      // measured rationale) — the bench measures what the library session
-      // ships; env-overridable for A/B
-      .config("spark.hadoop.fs.file.impl", sys.env.getOrElse(
-        "SPARK_GRAFT_FILE_FS", classOf[graft.core.NioLocalFileSystem].getName))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.core.GraftSession
+      .builder(s"local[$cpus]", "graft-bench", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // warm up JVM/codegen/datasource paths so the first measured query does
     // not absorb one-time session costs

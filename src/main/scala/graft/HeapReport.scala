@@ -1,10 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: bound the codegen-class cache's heap claim with a measured
-  * number (r22 VERDICT item 7 — `GraftSession` asserts "a few hundred MB
-  * at worst" for `spark.sql.codegen.cache.maxEntries=4096`).
+  * number (r22 VERDICT item 7 — the `EngineConf` rationale for
+  * `spark.sql.codegen.cache.maxEntries=4096` quotes it).
   *
   * Runs every `SparkEntry.queries` entry ONCE in one session (the same
   * shape as a full bench run: ~114 distinct queries' generated classes
@@ -15,27 +13,19 @@ import org.apache.spark.sql.SparkSession
   *     janino entries (DiagnosticCommand MBean — external `jcmd` attach is
   *     unavailable in the sandbox).
   *
-  * A/B via `SPARK_GRAFT_CODEGEN_CACHE` (4096 vs e.g. 100): the used-heap
-  * delta between runs is the cache's marginal footprint.
+  * A/B by overriding the cache size for one run, e.g.
+  * `JAVA_TOOL_OPTIONS=-Dspark.sql.codegen.cache.maxEntries=100`: the
+  * used-heap delta between runs is the cache's marginal footprint.
   *
   * Usage: runMain graft.HeapReport [sfDir]
   */
 object HeapReport {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
-    val cacheEntries = sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4096")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.codegen.cache.maxEntries", cacheEntries)
-      .config("spark.shuffle.sort.bypassMergeThreshold", "1")
-      .config("spark.scheduler.mode", "FAIR")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.core.GraftSession
+      .builder("local[32]", "graft-heapreport", 32).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    val cacheEntries = spark.conf.get("spark.sql.codegen.cache.maxEntries")
     var ok = 0
     var failed = 0
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev tool: run one pipeline-composition query and print the per-step
@@ -19,22 +18,8 @@ object PipelineProfile {
     val repeat = args.find(_.startsWith("repeat="))
       .map(_.stripPrefix("repeat=").toInt).getOrElse(1)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4096"))
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BYPASS_THRESHOLD", "1"))
-      .config("spark.scheduler.mode",
-        sys.env.getOrElse("SPARK_GRAFT_SCHEDULER", "FAIR"))
-      .config("spark.hadoop.fs.file.impl", sys.env.getOrElse(
-        "SPARK_GRAFT_FILE_FS", classOf[graft.core.NioLocalFileSystem].getName))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.core.GraftSession
+      .builder(s"local[$cpus]", "graft-profile", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark.range(1000).selectExpr("sum(id)").collect()
     spark.read.parquet(s"$sfDir/nation.parquet").count()

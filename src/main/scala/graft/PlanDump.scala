@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: run queries and write their `.explain("formatted")` output to
   * files — the plan evidence the optimization rounds commit under plans/.
   *
@@ -19,20 +17,12 @@ object PlanDump {
     val suffix = args(1)
     val names = args(2).split(",").map(_.trim).filter(_.nonEmpty)
     val sfDir = if (args.length > 3) args(3) else "/root/testdata/sf0.1"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // multi-query session: see GraftSession.builder codegen-cache note
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.core.GraftSession
+      .builder("local[32]", "graft-plandump", 32).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     names.foreach { name =>
-      try graft.core.ShuffleSizing.scoped(spark) {
+      try Bench.isolated(spark) {
         val df = SparkEntry.queries(name)(spark, sfDir)
         val txt = df.queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode)
@@ -43,13 +33,6 @@ object PlanDump {
       } catch {
         case e: Throwable =>
           println(s"[plandump] $name failed: ${e.getMessage}")
-      } finally {
-        graft.core.Caches.releaseAll()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
-        spark.catalog.listTables().collect()
-          .filter(_.isTemporary)
-          .foreach(t => spark.catalog.dropTempView(t.name))
       }
     }
     spark.stop()

@@ -99,35 +99,10 @@ object ScaleBench {
       if (args.length > 4) args(4).toInt
       else sys.env.get("SPARK_GRAFT_SCALE_RUNS").flatMap(_.toIntOption).getOrElse(1))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // SPARK_GRAFT_SHUFFLE remains as an explicit override, but is no longer
-    // required at the big tiers: the dedup operators derive an initial
-    // shuffle-partition count from the input size (core.ShuffleSizing —
-    // the measured 32-partition ENOSPC/spill footgun, SCALE.md) and AQE
-    // coalesces it back down at small scale
-    val shufflePartitions = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // multi-query session: see GraftSession.builder codegen-cache note
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .config("spark.ui.enabled", "false")
+    val spark = graft.core.GraftSession
+      .builder(s"local[$cpus]", "graft-scalebench", cpus.toInt)
       .config("spark.local.dir", s"$scratch/spark-local")
       .config("spark.sql.warehouse.dir", s"$scratch/warehouse")
-      // force the single-file-per-task sort shuffle writer: the bypass-merge
-      // writer opens one file per reduce partition per task, and with the
-      // sizing-raised partition counts of the 5M tiers that exceeded this
-      // container's hard 20k fd limit (measured: probe_full_recompute died
-      // on "Too many open files" at 32 tasks × ~450-partition shuffles).
-      // On a real cluster fds are per-executor and this is a non-issue;
-      // in one local[32] JVM the sort writer is the safe choice.
-      .config("spark.shuffle.sort.bypassMergeThreshold", "1")
-      // NIO chmod for file:// creates (GraftSession.builder rationale) —
-      // at the 1M/5M tiers the per-create subprocess fork multiplies over
-      // thousands of written files
-      .config("spark.hadoop.fs.file.impl",
-        classOf[graft.core.NioLocalFileSystem].getName)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val metrics = new Metrics

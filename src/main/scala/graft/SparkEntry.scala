@@ -52,7 +52,7 @@ object SparkEntry {
   private def dec(c: Column): Column = c.cast("decimal(18,2)")
 
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(GraftSession.tune(s), dir, name)
+    Tables.load(GraftSession.install(s), dir, name)
 
   /** Flagship query on sf=0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
@@ -284,7 +284,7 @@ object SparkEntry {
 
     // S3/S4/P4 — templated SQL with session vars + incremental predicate
     "q20_incremental_template" -> ((s, dir) => {
-      Tables.register(GraftSession.tune(s), dir, "events")
+      Tables.register(GraftSession.install(s), dir, "events")
       val template =
         """SELECT event_type,
           |       COUNT(*) AS n,
@@ -517,7 +517,7 @@ object SparkEntry {
 
     // S3/S4/S7 — flagship pipeline: template file → view → detail → summary
     "q40_report_pipeline" -> ((s, dir) => {
-      Tables.register(GraftSession.tune(s), dir, "events")
+      Tables.register(GraftSession.install(s), dir, "events")
       val conn = new graft.core.GraftConnection(s)
       val sqlDir = if (java.nio.file.Files.exists(java.nio.file.Paths.get("sql")))
         "sql" else "/root/repo/sql"

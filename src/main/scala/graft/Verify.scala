@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -11,46 +10,19 @@ object Verify {
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").map(_.trim).toSet) else None
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // multi-query session: see GraftSession.builder codegen-cache note
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      // the oracle drives the SHIPPED file:// filesystem (NIO chmod —
-      // GraftSession.builder has the measured rationale)
-      .config("spark.hadoop.fs.file.impl",
-        classOf[graft.core.NioLocalFileSystem].getName)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.core.GraftSession
+      .builder(s"local[$cpus]", "graft-verify", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
-      // scoped: one query's ShuffleSizing raise (raise-only by design) must
-      // not leak into the next query's plan in this shared session
-      try graft.core.ShuffleSizing.scoped(spark) {
+      try Bench.isolated(spark) {
         fn(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
       }
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-      finally {
-        graft.core.Caches.releaseAll() // drop operator-taken caches
-        // and the queries' localCheckpoint pins — same shared-session
-        // hygiene as Bench.runOnce (the async cleaner is too slow for a
-        // 100+-query session; nothing references them between queries).
-        // Temp views go WITH their blocks: a view over dropped checkpoint
-        // blocks is unrecoverable, and queries are self-contained
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
-        spark.catalog.listTables().collect()
-          .filter(_.isTemporary)
-          .foreach(tb => spark.catalog.dropTempView(tb.name))
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

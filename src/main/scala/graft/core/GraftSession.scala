@@ -3,6 +3,82 @@ package graft.core
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
 /**
+ * The engine's standard session configs: the one list every entry point
+ * (Bench, Verify, ScaleBench, the dev tools, the test fixture, perfbench)
+ * builds with, through [[GraftSession.builder]]. Each entry's measured
+ * rationale is stated here, once.
+ *
+ * A/B runs need no per-key switch: an explicitly set `spark.*` JVM system
+ * property beats the entry for its key ([[resolve]]), the precedence
+ * spark-submit gives `--conf`. For example
+ * `JAVA_TOOL_OPTIONS=-Dspark.scheduler.mode=FIFO sbt "runMain graft.Bench"`.
+ */
+object EngineConf {
+  val entries: Seq[(String, String)] = Seq(
+    "spark.sql.extensions" -> "graft.plans.GraftExtensions",
+    "spark.sql.adaptive.enabled" -> "true",
+    "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
+    "spark.sql.adaptive.skewJoin.enabled" -> "true",
+    // codegen-class cache sized for a MULTI-QUERY session: the default
+    // (100 entries) thrashes under the pipeline compositions — one
+    // audited ingest night plans ~260 distinct generated sources, so by
+    // the time the next night (structurally identical plans; literals
+    // live in the references array, not the source text) asks for the
+    // first source again it has been evicted, and EVERY stage pays a
+    // fresh Janino compile with all concurrent tasks blocked on it
+    // (measured: q100 re-ran 519 compiles on its second in-JVM run;
+    // ~0.45 s of blocked task time per compile × 32 tasks). Its marginal
+    // heap over the default, after all 114 queries in one session, was
+    // measured at ~54 MB (HeapReport: 1,979 entries, ~29 KB each),
+    // GC-able on eviction — the right trade for any long-lived session
+    // running hundreds of distinct queries, local or cluster. Read once
+    // per JVM at first codegen, hence a build-time conf.
+    "spark.sql.codegen.cache.maxEntries" -> "4096",
+    // Never take the bypass-merge shuffle writer (default threshold 200):
+    // it opens R partition files PER MAP TASK and then concatenates them,
+    // so a small shuffle on a many-core node costs M×R file
+    // creates/merges — measured on q100's pipeline at local[32]: the
+    // thread dumps show executor tasks RUNNABLE inside
+    // FileOutputStream.open/DiskBlockObjectWriter.initialize and
+    // mmap/unmap from the concat, 114.7 s of summed task time vs 15.3 s
+    // with the serialized (tungsten) writer, warm wall 14.7→10.6 s
+    // (plans/r22 journal). The same M×R open files exceeded a 20k fd
+    // limit at ScaleBench's sizing-raised 5M tiers (32 tasks × ~450-
+    // partition shuffles). The serialized writer buffers rows in
+    // execution memory and writes ONE file per map task at any partition
+    // count; at production partition counts (>200) bypass never fires
+    // anyway, so pinning the threshold to 1 only changes the small-
+    // shuffle regime where the file churn is pure overhead. Core conf,
+    // read at shuffle registration from the SparkContext conf.
+    "spark.shuffle.sort.bypassMergeThreshold" -> "1",
+    // FAIR job scheduling: the nightly pipeline submits its independent
+    // chains (ledger / accept+verify / index+maintain) concurrently, each
+    // tagged with its own on-demand pool (IngestPipeline.inParallel) —
+    // under the default FIFO a fat index append could starve the verify
+    // chain's DQ jobs on a busy cluster. Pools need no allocation file
+    // (weight 1, minShare 0, FIFO within a pool), and a session running
+    // one query at a time schedules exactly as before. Context-level conf.
+    "spark.scheduler.mode" -> "FAIR",
+    // file:// permission writes via java.nio instead of a forked chmod
+    // subprocess — without libhadoop native IO every local file CREATE
+    // shells out (see NioLocalFileSystem's measured rationale: ~52% of
+    // RUNNABLE executor samples in the q104 maintain window were
+    // Shell.runCommand; ~0.45 s/task on KB-scale writes). Same on-disk
+    // semantics; setuid/sticky and non-POSIX stores fall back to shell.
+    "spark.hadoop.fs.file.impl" -> classOf[NioLocalFileSystem].getName,
+    "spark.sql.session.timeZone" -> "UTC",
+    // testdata events.parquet stores TIMESTAMP(NANOS); Spark has no nanos
+    // timestamp type — read as Long and convert (see Tables.load).
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+    "spark.ui.enabled" -> "false")
+
+  /** `conf` with each key that `props` sets explicitly taken from `props`. */
+  def resolve(conf: Seq[(String, String)],
+      props: collection.Map[String, String]): Seq[(String, String)] =
+    conf.map { case (k, v) => k -> props.getOrElse(k, v) }
+}
+
+/**
  * Session / catalog lifecycle layer.
  *
  * Spark-native analogue of the reference's connector lifecycle
@@ -17,83 +93,32 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
  */
 object GraftSession {
 
-  /** Standard engine configs, applied on top of any existing builder. */
+  /** A builder carrying [[EngineConf]] plus the given master, app name and
+    * shuffle partitions; callers add only the overrides they need. */
   def builder(
       master: String = "local[*]",
       appName: String = "graft",
       shufflePartitions: Int = 32): SparkSession.Builder =
-    SparkSession.builder()
-      .master(master)
-      .appName(appName)
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      // codegen-class cache sized for a MULTI-QUERY session: the default
-      // (100 entries) thrashes under the pipeline compositions — one
-      // audited ingest night plans ~260 distinct generated sources, so by
-      // the time the next night (structurally identical plans; literals
-      // live in the references array, not the source text) asks for the
-      // first source again it has been evicted, and EVERY stage pays a
-      // fresh Janino compile with all concurrent tasks blocked on it
-      // (measured: q100 re-ran 519 compiles on its second in-JVM run;
-      // ~0.45 s of blocked task time per compile × 32 tasks). 4096 classes
-      // ≈ a few hundred MB of heap at worst, GC-able on eviction — the
-      // right trade for any long-lived session running hundreds of
-      // distinct queries, local or cluster. Read once per JVM at first
-      // codegen, hence set at build time, not in tune().
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      // Never take the bypass-merge shuffle writer (default threshold 200):
-      // it opens R partition files PER MAP TASK and then concatenates them,
-      // so a small shuffle on a many-core node costs M×R file
-      // creates/merges — measured on q100's pipeline at local[32]: the
-      // thread dumps show executor tasks RUNNABLE inside
-      // FileOutputStream.open/DiskBlockObjectWriter.initialize and
-      // mmap/unmap from the concat, 114.7 s of summed task time vs 15.3 s
-      // with the serialized (tungsten) writer, warm wall 14.7→10.6 s
-      // (plans/r22 journal). The serialized writer buffers rows in
-      // execution memory and writes ONE file per map task at any partition
-      // count; at production partition counts (>200) bypass never fires
-      // anyway, so pinning the threshold to 1 only changes the small-
-      // shuffle regime where the file churn is pure overhead. Core conf —
-      // read at shuffle registration from the SparkContext conf, so it
-      // must be set at build time (tune() cannot retrofit it).
-      .config("spark.shuffle.sort.bypassMergeThreshold", "1")
-      // FAIR job scheduling: the nightly pipeline submits its independent
-      // chains (ledger / accept+verify / index+maintain) concurrently, each
-      // tagged with its own on-demand pool (IngestPipeline.inParallel) —
-      // under the default FIFO a fat index append could starve the verify
-      // chain's DQ jobs on a busy cluster. Pools need no allocation file
-      // (weight 1, minShare 0, FIFO within a pool), and a session running
-      // one query at a time schedules exactly as before. Context-level
-      // conf, so set at build time.
-      .config("spark.scheduler.mode", "FAIR")
-      // file:// permission writes via java.nio instead of a forked chmod
-      // subprocess — without libhadoop native IO every local file CREATE
-      // shells out (see NioLocalFileSystem's measured rationale: ~52% of
-      // RUNNABLE executor samples in the q104 maintain window were
-      // Shell.runCommand; ~0.45 s/task on KB-scale writes). Same on-disk
-      // semantics; setuid/sticky and non-POSIX stores fall back to shell.
-      .config("spark.hadoop.fs.file.impl",
-        classOf[NioLocalFileSystem].getName)
-      .config("spark.sql.session.timeZone", "UTC")
-      // testdata events.parquet stores TIMESTAMP(NANOS); Spark has no nanos
-      // timestamp type — read as Long and convert (see Tables.load).
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
+    EngineConf.resolve(
+        EngineConf.entries :+ ("spark.sql.shuffle.partitions" -> shufflePartitions.toString),
+        sys.props)
+      .foldLeft(SparkSession.builder().master(master).appName(appName)) {
+        case (b, (k, v)) => b.config(k, v)
+      }
 
-  def local(shufflePartitions: Int = 32): SparkSession = {
-    val s = builder(shufflePartitions = shufflePartitions).getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
-
-  /** Apply engine configs to an externally-created session (Verify/Bench). */
-  def tune(spark: SparkSession): SparkSession = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
+  /** Idempotent set-up of a session that was built elsewhere and is handed
+    * in already running: sets the runtime-settable [[EngineConf]] keys and
+    * registers the engine's SQL functions where missing. Build-time keys
+    * (extensions, codegen cache, shuffle writer, scheduler, file system)
+    * need [[builder]]. */
+  def install(spark: SparkSession): SparkSession = {
+    EngineConf.resolve(EngineConf.entries, sys.props)
+      .foreach { case (k, v) => if (spark.conf.isModifiable(k)) spark.conf.set(k, v) }
+    val registry = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.functionRegistry
+    graft.plans.GraftExtensions.functions.foreach { case (id, info, build) =>
+      if (!registry.functionExists(id)) registry.registerFunction(id, info, build)
+    }
     spark
   }
 }

@@ -9,7 +9,7 @@ import org.apache.spark.sql.DataFrame
  * sort hundreds of millions of rows; with the session default of 32
  * shuffle partitions, per-task sort state outgrew memory, spilled 11 GB
  * at 1M docs and ran a multi-hundred-GB /tmp spill into ENOSPC at 5M.
- * The remedy was a MANUAL `SPARK_GRAFT_SHUFFLE=128` — a sizing rule the
+ * The remedy was a MANUAL 128-partition shuffle override — a sizing rule the
  * user had to know. This helper derives it instead: estimate the
  * operator's shuffle volume from the input plan's size statistic times a
  * measured expansion factor, and RAISE

@@ -135,7 +135,7 @@ object ClaimsPipeline {
   /** Render + run the source-dialect form through the dialect shim. */
   def detailReportSnowflakeSql(
       spark: SparkSession, sourceView: String, period: ReportPeriod): DataFrame = {
-    org.apache.spark.sql.graft.ColumnBridge.installFunctions(spark)
+    graft.core.GraftSession.install(spark)
     val rendered = graft.core.SqlTemplate.render(
       DetailSqlTemplateSnowflake,
       placeholders = Map("SOURCE_TABLE" -> sourceView),
@@ -151,7 +151,7 @@ object ClaimsPipeline {
     // FM_WORKINGDAYSBETWEEN (ref: ...detail.sql:121); the SQL name is bound
     // to the same CLOSED-FORM codegen'd expression the DataFrame path uses
     // (functions/Dates.scala:21) — not an O(days) per-row loop
-    org.apache.spark.sql.graft.ColumnBridge.installFunctions(spark)
+    graft.core.GraftSession.install(spark)
     val rendered = graft.core.SqlTemplate.render(
       DetailSqlTemplate,
       placeholders = Map("SOURCE_TABLE" -> sourceView),

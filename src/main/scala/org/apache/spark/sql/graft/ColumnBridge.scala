@@ -15,32 +15,6 @@ object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
-  /**
-   * Register the engine's SQL functions on an ALREADY-RUNNING session —
-   * `spark.sql.extensions` is a static conf that only applies to fresh
-   * SparkContexts, so driver-provided sessions need this temp-function path.
-   */
-  def installFunctions(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val reg = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("dot_product_q",
-      args => graft.plans.DotProductQ(args.head, args(1)), "built-in")
-    reg.createOrReplaceTempFunction("quantize_vector",
-      args => graft.plans.QuantizeVector(args.head), "built-in")
-    reg.createOrReplaceTempFunction("adc_score_q",
-      args => graft.plans.AdcScoreQ(args.head, args(1)), "built-in")
-    // the reference's external FM_WORKINGDAYSBETWEEN warehouse UDF, bound to
-    // the CLOSED-FORM native expression (plans/DateExpressions.scala) —
-    // O(1) per row and codegen'd, vs the naive O(days) iterate-and-count
-    // UDF form
-    reg.createOrReplaceTempFunction("fm_workingdaysbetween",
-      args => graft.plans.WorkingDaysBetween(
-        org.apache.spark.sql.catalyst.expressions.Cast(args.head,
-          org.apache.spark.sql.types.DateType),
-        org.apache.spark.sql.catalyst.expressions.Cast(args(1),
-          org.apache.spark.sql.types.DateType)), "built-in")
-  }
-
   /** Drain the listener bus so task-metrics listeners (ScaleBench) have
     * seen every completed task before counters are read — the bus posts
     * events asynchronously and `waitUntilEmpty` is `private[spark]`. */

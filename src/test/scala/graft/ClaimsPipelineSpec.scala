@@ -8,7 +8,7 @@ class ClaimsPipelineSpec extends AnyFunSuite with SparkSpec {
 
   test("DataFrame form and SQL-template form produce identical reports") {
     val dir = "/root/testdata/sf0.001"
-    Tables.registerAll(GraftSession.tune(spark), dir)
+    Tables.registerAll(GraftSession.install(spark), dir)
     val period = ClaimsPipeline.ReportPeriod(
       "2024-01-01 00:00:00", "2024-01-20 00:00:00")
     val viaDf = ClaimsPipeline.detailReport(
@@ -26,7 +26,7 @@ class ClaimsPipelineSpec extends AnyFunSuite with SparkSpec {
     val period = ClaimsPipeline.ReportPeriod(
       "2024-01-01 00:00:00", "2024-01-20 00:00:00")
     val out = TempDirs.create("graftclaims").toString + "/report"
-    ClaimsPipeline.detailReport(Tables.load(GraftSession.tune(spark), dir, "events"), period)
+    ClaimsPipeline.detailReport(Tables.load(GraftSession.install(spark), dir, "events"), period)
       .write.parquet(out)
     val back = spark.read.parquet(out)
     assert(back.columns.contains("First Decision Date"))

@@ -34,7 +34,7 @@ class DatesSpec extends AnyFunSuite with SparkSpec {
 
   test("native fm_workingdaysbetween (SQL) equals the composed Column form") {
     import spark.implicits._
-    org.apache.spark.sql.graft.ColumnBridge.installFunctions(spark)
+    graft.core.GraftSession.install(spark)
     val base = java.time.LocalDate.of(2023, 12, 25)
     val cases = (for (i <- 0 until 40; d <- Seq(0L, 1L, 6L, 7L, 13L, 365L))
       yield (base.plusDays(i * 11L).toString, base.plusDays(i * 11L + d).toString))

@@ -349,7 +349,7 @@ class DialectSpec extends AnyFunSuite with SparkSpec {
     val dir = "/root/testdata/sf0.001"
     val period = ClaimsPipeline.ReportPeriod(
       "2024-01-01 00:00:00", "2024-01-20 00:00:00")
-    val events = core.Tables.load(core.GraftSession.tune(spark), dir, "events")
+    val events = core.Tables.load(core.GraftSession.install(spark), dir, "events")
     events.createOrReplaceTempView("dialect_events")
     val viaDf = ClaimsPipeline.detailReport(events, period)
     val viaSnow = ClaimsPipeline.detailReportSnowflakeSql(spark, "dialect_events", period)

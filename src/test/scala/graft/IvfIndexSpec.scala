@@ -16,7 +16,7 @@ import graft.operators.{IvfIndex, Similarity}
 class IvfIndexSpec extends AnyFunSuite with SparkSpec {
 
   private lazy val emb =
-    Tables.load(GraftSession.tune(spark), "/root/testdata/sf0.001", "embeddings")
+    Tables.load(GraftSession.install(spark), "/root/testdata/sf0.001", "embeddings")
 
   private def rows(df: org.apache.spark.sql.DataFrame) =
     df.select(col("query_id").cast("long"), col("neighbor_id").cast("long"),

@@ -86,7 +86,7 @@ class PlanShapeSpec extends AnyFunSuite with SparkSpec {
     // distinct-shingle hashes back to (id, shingle); a second join would
     // mean the quadratic banded self-join came back
     import graft.operators.Dedup
-    val docs = core.Tables.load(core.GraftSession.tune(spark), dir, "documents")
+    val docs = core.Tables.load(core.GraftSession.install(spark), dir, "documents")
       .select("doc_id", "text")
     val raw = Dedup.minhashLshPairs(docs, "doc_id", "text", shingleK = 3,
         numHashes = 8, bands = 4, maxBucket = 200, portable = true)
@@ -111,7 +111,7 @@ class PlanShapeSpec extends AnyFunSuite with SparkSpec {
     // the saturation tap is an always-true filter fed by an accumulator —
     // it must not introduce a shuffle or block the capped pipeline's shape
     import graft.operators.Dedup
-    val docs = core.Tables.load(core.GraftSession.tune(spark), dir, "documents")
+    val docs = core.Tables.load(core.GraftSession.install(spark), dir, "documents")
       .select("doc_id", "text")
     def exchanges(df: org.apache.spark.sql.DataFrame): Int =
       "Exchange".r.findAllIn(df.queryExecution.executedPlan.toString).size
@@ -232,7 +232,7 @@ class PlanShapeSpec extends AnyFunSuite with SparkSpec {
     // Catalyst collapses the wrapper projections
     val period = ClaimsPipeline.ReportPeriod(
       "2024-01-01 00:00:00", "2024-01-20 00:00:00")
-    core.Tables.load(core.GraftSession.tune(spark), dir, "events")
+    core.Tables.load(core.GraftSession.install(spark), dir, "events")
       .createOrReplaceTempView("plan_events")
     def shape(df: org.apache.spark.sql.DataFrame): (Int, Int) = {
       val p = df.queryExecution.executedPlan.toString
@@ -253,7 +253,7 @@ class PlanShapeSpec extends AnyFunSuite with SparkSpec {
     // (Strip the final presentation orderBy — its range exchange is the
     // query's, not the operator's.)
     val packed = graft.operators.Packing.packShards(
-      core.Tables.load(core.GraftSession.tune(spark), dir, "documents")
+      core.Tables.load(core.GraftSession.install(spark), dir, "documents")
         .select(org.apache.spark.sql.functions.col("doc_id"),
           org.apache.spark.sql.functions.col("n_chars")),
       "doc_id", "n_chars", budget = 50000, buckets = 64)

@@ -140,8 +140,8 @@ class PlansSpec extends AnyFunSuite with SparkSpec {
       && r.getLong(4) == 2500000L * 2500000L, r.toString)
   }
 
-  test("installFunctions exposes the native expressions to SQL") {
-    org.apache.spark.sql.graft.ColumnBridge.installFunctions(spark)
+  test("install exposes the native expressions to SQL") {
+    graft.core.GraftSession.install(spark)
     val r = spark.sql(
       """SELECT dot_product_q(quantize_vector(array(CAST(0.1 AS FLOAT), CAST(0.2 AS FLOAT))),
         |                     quantize_vector(array(CAST(0.3 AS FLOAT), CAST(0.4 AS FLOAT)))) AS d""".stripMargin)
@@ -156,7 +156,7 @@ class PlansSpec extends AnyFunSuite with SparkSpec {
   test("boundedTopK aggregate reproduces the window row_number form exactly") {
     import graft.operators.Similarity
     import graft.core.{GraftSession, Tables}
-    val e = Tables.load(GraftSession.tune(spark), "/root/testdata/sf0.001", "embeddings")
+    val e = Tables.load(GraftSession.install(spark), "/root/testdata/sf0.001", "embeddings")
       .repartition(8) // force partial-aggregate merges across partitions
     val q = e.filter(col("vec_id") < 5)
     val viaWindow = Similarity.bruteForceTopK(q, e, "vec_id", "vec_id",

@@ -28,23 +28,16 @@ object TempDirs {
   }
 }
 
-/** Shared local session for specs: small parallelism, engine configs. */
+/** Shared local session for specs: the shipped engine ([[graft.core.EngineConf]])
+  * with three declared overrides — `local[4]`, 4 shuffle partitions and a
+  * scratch warehouse. */
 object SparkFixture {
+  val master = "local[4]"
+  val shufflePartitions = 4
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
+    val s = graft.core.GraftSession.builder(master, "graft-test", shufflePartitions)
       .config("spark.sql.warehouse.dir",
         TempDirs.create("graft-warehouse").toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // the engine ships NIO-chmod file:// (GraftSession.builder) — every
-      // suite's writes/vacuums/renames must run on the SHIPPED filesystem
-      .config("spark.hadoop.fs.file.impl",
-        classOf[graft.core.NioLocalFileSystem].getName)
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
